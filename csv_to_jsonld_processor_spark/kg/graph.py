@@ -1,23 +1,25 @@
 """Predicate canonicalization + graph materialization + validation.
 
 Canonicalization is the web-text analog of header→vocabulary-term
-mapping (reference P1/P5): surface phrases resolve through a broadcast
-@context map to canonical predicate IRIs. Unresolvable surfaces and
-link failures route to a ``violations`` table instead of killing the
-job — the reference's warn-vs-error ProcessingState (A7) re-expressed
-as data.
+mapping (reference P1/P5): surface phrases resolve through the @context
+map, inlined as a literal map column, to canonical predicate IRIs.
+Unresolvable surfaces and link failures route to a ``violations`` table
+instead of killing the job — the reference's warn-vs-error
+ProcessingState (A7) re-expressed as data.
 
 Materialization writes ``entities`` / ``predicates`` / ``edges`` tables
 partitioned by a deterministic bucket of the subject (hash-bucketed so
 downstream joins/merges on subj are co-partitioned). Writers go through
 ``write_table`` which uses Iceberg (``writeTo``) when a catalog is
 configured and falls back to partitioned parquet otherwise — this
-sandbox has no Iceberg jars, the layout is identical either way.
+sandbox has no Iceberg jars, the layout is identical either way. Each
+write counts its rows in the writing job (``DataFrame.observe``), so
+reporting table sizes costs no extra scan.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from ..iri import to_kebab_case
@@ -31,6 +33,13 @@ N_BUCKETS = 64
 def predicate_context(predicates: list[tuple]) -> dict[str, str]:
     """surface phrase → canonical predicate IRI (broadcast artifact)."""
     return {surface: KG_TERMS + canon for surface, canon, _s, _o in predicates}
+
+
+def literal_map(mapping: dict) -> F.Column:
+    """A dimension-sized lookup as a literal map column: ``m[key]`` is the
+    value, NULL when the key is absent. It is evaluated inside each row's
+    own stage, where a broadcast join costs a Spark job per query."""
+    return F.create_map(*(F.lit(x) for kv in mapping.items() for x in kv))
 
 
 def entity_iri_col(cls_col: F.Column, name_col: F.Column) -> F.Column:
@@ -48,10 +57,7 @@ def canonicalize_edges(linked: DataFrame, context: dict[str, str]) -> tuple[Data
     edges: (subj, pred, obj, url, sent_idx) with IRIs everywhere.
     violations: unlinked subject/object or unknown predicate surface.
     """
-    spark = linked.sparkSession
-    ctx = spark.createDataFrame(list(context.items()), ["surface", "pred_iri"])
-
-    j = linked.join(F.broadcast(ctx), linked["pred_surface"] == ctx["surface"], "left")
+    j = linked.withColumn("pred_iri", literal_map(context)[F.col("pred_surface")])
 
     ok = (
         j.where(
@@ -99,12 +105,11 @@ def validate_edges(edges: DataFrame, domain_range: dict[str, tuple[str, str]]) -
 
     domain_range: canonical predicate IRI → (subj class, obj class).
     Returns additional violations."""
-    spark = edges.sparkSession
-    dr = spark.createDataFrame(
-        [(p, d, r) for p, (d, r) in domain_range.items()],
-        ["_pred", "_want_domain", "_want_range"],
+    domain = literal_map({p: d for p, (d, _r) in domain_range.items()})
+    range_ = literal_map({p: r for p, (_d, r) in domain_range.items()})
+    j = edges.withColumn("_want_domain", domain[F.col("pred")]).withColumn(
+        "_want_range", range_[F.col("pred")]
     )
-    j = edges.join(F.broadcast(dr), edges["pred"] == dr["_pred"], "left")
     return (
         j.where(
             (F.col("subj_class") != F.col("_want_domain"))
@@ -127,16 +132,15 @@ def validate_cardinality(edges: DataFrame, max_counts: dict[str, int]) -> DataFr
     """sh:maxCount as a groupBy constraint: a subject whose DISTINCT
     object count for a functional predicate exceeds the cap is a
     violation (e.g. two different birthPlaces). One partial-aggregated
-    groupBy on (subj, pred) — at 100 TB the shuffle carries only the
-    (subj, pred) key space, and the cap table broadcasts."""
-    spark = edges.sparkSession
-    mc = spark.createDataFrame(
-        [(p, int(c)) for p, c in max_counts.items()], ["_pred", "_max_count"]
+    groupBy on (subj, pred) over the capped predicates' edges only — at
+    100 TB the shuffle carries only that (subj, pred) key space."""
+    counts = (
+        edges.where(F.col("pred").isin(*max_counts))
+        .groupBy("subj", "pred").agg(F.countDistinct("obj").alias("n_obj"))
+        .withColumn("_max_count", literal_map(max_counts)[F.col("pred")])
     )
-    counts = edges.groupBy("subj", "pred").agg(F.countDistinct("obj").alias("n_obj"))
     return (
-        counts.join(F.broadcast(mc), counts["pred"] == mc["_pred"])
-        .where(F.col("n_obj") > F.col("_max_count"))
+        counts.where(F.col("n_obj") > F.col("_max_count"))
         .select(
             F.lit("shacl_cardinality").alias("stage"),
             F.lit("max_count_exceeded").alias("rule"),
@@ -181,28 +185,36 @@ def with_bucket(df: DataFrame, key: str = "subj", n: int = N_BUCKETS) -> DataFra
 
 
 def write_table(df: DataFrame, path_or_ident: str, partition_by: list[str] | None = None,
-                mode: str = "overwrite") -> None:
-    """Iceberg writeTo when a catalog identifier is given (contains a dot
-    and a catalog is configured), else partitioned parquet."""
-    spark = df.sparkSession
-    if "." in path_or_ident and not path_or_ident.startswith("/"):
+                mode: str = "overwrite") -> int:
+    """Iceberg writeTo when given a catalog identifier (dotted, with no
+    ``/``, so relative paths such as ``./kg`` or ``../out`` stay paths),
+    else partitioned parquet. Returns the number of rows written, counted
+    by the writing job itself."""
+    written = Observation()
+    df = df.observe(written, F.count(F.lit(1)).alias("rows"))
+    if "." in path_or_ident and "/" not in path_or_ident:
         writer = df.writeTo(path_or_ident)
         if mode == "overwrite":
             writer.createOrReplace()
         else:
             writer.append()
-        return
-    w = df.write.mode(mode)
-    if partition_by:
-        w = w.partitionBy(*partition_by)
-    w.parquet(path_or_ident)
+    else:
+        w = df.write.mode(mode)
+        if partition_by:
+            w = w.partitionBy(*partition_by)
+        w.parquet(path_or_ident)
+    return written.get["rows"]
 
 
 def materialize_graph(edges: DataFrame, violations: DataFrame, out_dir: str) -> dict:
     """entities/predicates/edges/violations — entities deduped from both
-    edge endpoints (the reference's merge-by-@id A1 over the graph)."""
-    edges_b = with_bucket(edges)
-    write_table(edges_b, f"{out_dir}/edges", partition_by=["bucket"])
+    edge endpoints (the reference's merge-by-@id A1 over the graph).
+    Returns each table's row count, taken from the job that wrote it.
+
+    Every table reads ``edges``; callers that pass lazily derived inputs
+    should cache their common source (``build_kg`` persists the linked
+    mentions) or each write recomputes it."""
+    counts = {"edges": write_table(with_bucket(edges), f"{out_dir}/edges", partition_by=["bucket"])}
 
     subj_side = edges.select(
         F.col("subj").alias("iri"), F.col("subj_name").alias("label"),
@@ -213,19 +225,14 @@ def materialize_graph(edges: DataFrame, violations: DataFrame, out_dir: str) -> 
         F.col("obj_class").alias("entity_class"),
     )
     entities = subj_side.unionByName(obj_side).dropDuplicates(["iri"])
-    write_table(with_bucket(entities, "iri"), f"{out_dir}/entities", partition_by=["bucket"])
+    counts["entities"] = write_table(
+        with_bucket(entities, "iri"), f"{out_dir}/entities", partition_by=["bucket"]
+    )
 
     predicates = (
         edges.groupBy("pred").agg(F.count(F.lit(1)).alias("n_edges"))
         .withColumnRenamed("pred", "iri")
     )
-    write_table(predicates, f"{out_dir}/predicates")
-    write_table(violations, f"{out_dir}/violations")
-
-    spark = edges.sparkSession
-    return {
-        "edges": spark.read.parquet(f"{out_dir}/edges").count(),
-        "entities": spark.read.parquet(f"{out_dir}/entities").count(),
-        "predicates": spark.read.parquet(f"{out_dir}/predicates").count(),
-        "violations": spark.read.parquet(f"{out_dir}/violations").count(),
-    }
+    counts["predicates"] = write_table(predicates, f"{out_dir}/predicates")
+    counts["violations"] = write_table(violations, f"{out_dir}/violations")
+    return counts

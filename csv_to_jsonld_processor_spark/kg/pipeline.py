@@ -3,9 +3,14 @@
 pages (Iceberg/parquet) → extract text (mapInPandas, byte-pinned)
 → mention + triple extraction (mapInPandas)
 → entity linking (blocked join, broadcast or salted shuffle)
-→ predicate canonicalization (broadcast @context)
+→ predicate canonicalization (@context as a literal map column)
 → SHACL-style validation → entities/predicates/edges (+violations)
 with per-partition lineage when a ledger dir is given.
+
+Every table derives from the linked mentions, so when ``build_kg``
+materialises the graph it caches them for the duration of the writes:
+the pages scan and the Python stage run once per materialisation, not
+once per sink, and the row counts come from the writing jobs.
 """
 
 from __future__ import annotations
@@ -48,8 +53,14 @@ def build_kg(
     entities: list[tuple] = ENTITIES,
     predicates: list[tuple] = PREDICATES,
 ) -> dict:
-    """Returns dict with edges/violations DataFrames and (if out_dir)
-    materialized table counts."""
+    """Returns dict with lazy edges/violations DataFrames and, if out_dir
+    is given, the row counts of the four tables written there.
+
+    With out_dir the linked mentions are computed once: they are
+    persisted for the writes (the first write fills the cache, the other
+    sinks read it) and unpersisted afterwards, also when a write fails.
+    persist rather than localCheckpoint keeps the lineage, so a lost
+    executor recomputes its blocks instead of failing the job."""
     surfaces = [p[0] for p in predicates]
     gazetteer = [a for _c, aliases, _cls in entities for a in aliases]
 
@@ -68,14 +79,25 @@ def build_kg(
         linked = link_mentions(linked, kb, "obj_mention", strategy=link_strategy)
 
     edges, viol = canonicalize_edges(linked, predicate_context(predicates))
-    viol = viol.unionByName(validate_edges(edges, DOMAIN_RANGE))
-    viol = viol.unionByName(validate_cardinality(edges, MAX_COUNTS))
-    viol = viol.unionByName(validate_node_iris(edges))
-
-    result = {"edges": edges, "violations": viol}
-    if out_dir:
-        result["counts"] = materialize_graph(edges, viol, out_dir)
+    result = {"edges": edges, "violations": validate_graph(edges, viol)}
+    if not out_dir:
+        return result
+    linked.persist()
+    try:
+        result["counts"] = materialize_graph(edges, result["violations"], out_dir)
+    finally:
+        linked.unpersist()
     return result
+
+
+def validate_graph(edges: DataFrame, link_violations: DataFrame) -> DataFrame:
+    """The link/canonicalisation violations plus every SHACL check over
+    the edges: domain/range, functional-predicate cardinality, node kind."""
+    return (
+        link_violations.unionByName(validate_edges(edges, DOMAIN_RANGE))
+        .unionByName(validate_cardinality(edges, MAX_COUNTS))
+        .unionByName(validate_node_iris(edges))
+    )
 
 
 def build_kg_resumable(
@@ -146,7 +168,5 @@ def build_kg_resumable(
     viol = canonicalize_edges(
         spark.read.parquet(f"{work_dir}/linked").drop("part_id"), ctx
     )[1]
-    viol = viol.unionByName(validate_edges(edges, DOMAIN_RANGE))
-    viol = viol.unionByName(validate_cardinality(edges, MAX_COUNTS))
-    viol = viol.unionByName(validate_node_iris(edges))
+    viol = validate_graph(edges, viol)
     return {"edges": edges, "violations": viol, "ledger": ledger}

@@ -66,24 +66,23 @@ def kg_edge_window_counts_stream(
     ``warc_ts`` rides through the fused UDF via its ``passthrough``
     hook and the watermark is declared on the UDF OUTPUT (a mapInPandas
     barrier produces new attributes, so a pre-UDF watermark would not
-    propagate). Predicate canonicalization is the same broadcast
-    @context lookup as kg/graph.py, applied as a literal map column;
-    rows failing linking or context lookup are dropped exactly as
+    propagate). Predicate canonicalization is the same literal-map
+    @context lookup as kg/graph.py's canonicalize_edges; rows failing
+    linking or context lookup are dropped exactly as
     canonicalize_edges routes them to violations. Drained complete-mode
     for the bounded stream==batch test (run_stream_over_dir explains
     why); production runs append with windows finalizing as the
     watermark passes them."""
     from pyspark.sql import functions as F
 
-    from ..kg.graph import predicate_context
+    from ..kg.graph import literal_map, predicate_context
     from ..kg.link import kb_index
     from ..kg.mentions import extract_link_from_html
 
     surfaces = [p[0] for p in PREDICATES]
     gazetteer = [a for _c, aliases, _cls in ENTITIES for a in aliases]
     idx = kb_index(ENTITIES)
-    ctx = predicate_context(PREDICATES)
-    pred_map = F.create_map(*[F.lit(x) for kv in ctx.items() for x in kv])
+    pred_map = literal_map(predicate_context(PREDICATES))
 
     def transform(stream: DataFrame) -> DataFrame:
         linked = extract_link_from_html(

@@ -5,7 +5,7 @@ shape of a live crawl feed at 10^12 documents).
 
 Why this works unchanged: every stage of the construction pipeline is
 STATELESS per row — Arrow-batched extract+link (mapInPandas with the
-KB broadcast as a dict), broadcast @context canonicalization, filter
+KB broadcast as a dict), literal-map @context canonicalization, filter
 validations.  A stateless pipeline is micro-batch-invariant, so the
 streaming run must produce the exact multiset of edges the batch run
 produces over the same corpus; the registered query pins that with the

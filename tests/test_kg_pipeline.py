@@ -90,6 +90,84 @@ def test_materialize_and_violations(spark, pages, tmp_path):
     assert all(r.iri.startswith("http://example.org/kg/ids/") for r in e)
 
 
+def _persistent_rdds(spark) -> int:
+    return len(spark.sparkContext._jsc.getPersistentRDDs())
+
+
+def test_materialize_reads_pages_once(spark, pages, tmp_path):
+    """Every sink (edges, both entity sides, predicates, the four
+    violation sources) reads the linked mentions, so build_kg(out_dir=...)
+    computes them once for all writes and takes the counts from the
+    writing jobs rather than re-reading the tables."""
+    from csv_to_jsonld_processor_spark.kg.pipeline import build_kg
+
+    sc = spark.sparkContext
+    n_pages = pages.count()
+    seen = sc.accumulator(0)
+
+    def count(batches):  # pass-through: how many times the build reads pages
+        for pdf in batches:
+            seen.add(len(pdf))
+            yield pdf
+
+    sc.setJobGroup("kg-one-pass", "build_kg(out_dir=...)")
+    try:
+        build_kg(spark, pages.mapInPandas(count, schema=pages.schema), out_dir=str(tmp_path / "kg"))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert seen.value == n_pages  # recomputing per sink read them 8 times
+    # recomputing per sink, broadcasting the lookup tables per query and
+    # re-reading each table for its count ran 27 jobs on this fixture
+    assert len(sc.statusTracker().getJobIdsForGroup("kg-one-pass")) <= 27 // 2
+
+
+@pytest.mark.parametrize("link_strategy", ["fused_broadcast", "broadcast"])
+def test_materialize_counts_tables_and_releases_cache(spark, pages, tmp_path, link_strategy):
+    """counts equal the written tables, the written edges/violations equal
+    the lazily recomputed ones as multisets, and build_kg leaves no cached
+    RDD behind, also when a write fails."""
+    from collections import Counter
+
+    from pyspark.errors import PythonException
+
+    from csv_to_jsonld_processor_spark.kg.pipeline import build_kg
+
+    pages.count()  # fill the fixture's own cache before taking the census
+    cached = _persistent_rdds(spark)
+    out = tmp_path / "kg"
+    res = build_kg(spark, pages, out_dir=str(out), link_strategy=link_strategy)
+    assert _persistent_rdds(spark) == cached
+
+    tables = {t: spark.read.parquet(str(out / t)) for t in ("edges", "entities", "predicates", "violations")}
+    assert res["counts"] == {t: df.count() for t, df in tables.items()}
+    for t in ("edges", "violations"):
+        written = tables[t].select(*res[t].columns).collect()
+        assert Counter(map(tuple, written)) == Counter(map(tuple, res[t].collect())), t
+
+    def fail(batches):
+        for _pdf in batches:
+            raise RuntimeError("injected read failure")
+            yield  # pragma: no cover
+
+    with pytest.raises(PythonException, match="injected read failure"):
+        build_kg(spark, pages.mapInPandas(fail, schema=pages.schema),
+                 out_dir=str(tmp_path / "failed"), link_strategy=link_strategy)
+    assert _persistent_rdds(spark) == cached
+
+
+def test_write_table_relative_dotted_path(spark, tmp_path):
+    """A relative path with dots ("./kg", "../out.v1") is a parquet path,
+    not a catalog identifier. Spark resolves relative paths against the
+    JVM's working directory, so the path leads from there to tmp_path."""
+    from csv_to_jsonld_processor_spark.kg.graph import write_table
+
+    jvm_cwd = spark.sparkContext._jvm.java.lang.System.getProperty("user.dir")
+    rel = "./" + os.path.relpath(tmp_path / "out.v1" / "t", jvm_cwd)
+    assert write_table(spark.range(5), rel) == 5
+    assert spark.read.parquet(str(tmp_path / "out.v1" / "t")).count() == 5
+
+
 def test_resume_ledger_identical_output(spark, pages, tmp_path):
     from pyspark.sql import functions as F
 
