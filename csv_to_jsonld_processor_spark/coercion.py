@@ -39,6 +39,17 @@ _DATE_PATTERNS = [
 ]
 
 
+def literal_map(mapping: dict) -> Column:
+    """A dimension-sized lookup as a literal map column: ``m[key]`` is the
+    value, NULL when the key is absent. It is evaluated inside each row's
+    own stage, where a broadcast join costs a Spark job per query. An
+    empty mapping is typed ``map<string,string>`` so lookups still
+    resolve (to NULL)."""
+    if not mapping:
+        return F.create_map().cast("map<string,string>")
+    return F.create_map(*(F.lit(x) for kv in mapping.items() for x in kv))
+
+
 def _year_sane(d: Column) -> Column:
     """Clamp format-parsed dates to 4-digit unsigned years. Java's yyyy
     (SignStyle.EXCEEDS_PAD) sneaks in '-262144' / '+12345' style years

@@ -22,6 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
+from ..coercion import literal_map
 from ..iri import to_kebab_case
 
 KG_TERMS = "http://example.org/kg/terms/"
@@ -33,13 +34,6 @@ N_BUCKETS = 64
 def predicate_context(predicates: list[tuple]) -> dict[str, str]:
     """surface phrase → canonical predicate IRI (broadcast artifact)."""
     return {surface: KG_TERMS + canon for surface, canon, _s, _o in predicates}
-
-
-def literal_map(mapping: dict) -> F.Column:
-    """A dimension-sized lookup as a literal map column: ``m[key]`` is the
-    value, NULL when the key is absent. It is evaluated inside each row's
-    own stage, where a broadcast join costs a Spark job per query."""
-    return F.create_map(*(F.lit(x) for kv in mapping.items() for x in kv))
 
 
 def entity_iri_col(cls_col: F.Column, name_col: F.Column) -> F.Column:

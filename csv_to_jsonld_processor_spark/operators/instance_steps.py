@@ -16,8 +16,8 @@ column expressions over a CSV/parquet scan:
   instead of the reference's UUIDv4 (processor_impl.rs:233) — see
   SURVEY §2.8: UUIDs make runs unreproducible; content hashes keep
   blank-node identity stable across runs and cluster sizes
-- R2 EAV → per-row triple emission + broadcast property resolve (J2)
-- R3 subclass typing → broadcast class resolve (J3)
+- R2 EAV → per-row triple emission + literal-map property resolve (J2)
+- R3 subclass typing → literal-map class resolve (J3)
 - A1 merge-by-@id → the triple table IS the merged form: set-union
   semantics fall out of ``dropDuplicates`` on (subj, pred, obj)
 
@@ -27,8 +27,8 @@ The output is the long/normalized triple table (FIXTURES.md §C):
 
 Scale notes: each step is one scan → narrow transforms → explode; no
 shuffle until the final ``dropDuplicates`` (one exchange on the triple
-key). Vocabulary lookups are plan-time constants or broadcast joins —
-never a shuffled join. At 100 TB the explode fan-out is bounded by
+key). Vocabulary lookups are plan-time constants or literal-map
+columns — never a join. At 100 TB the explode fan-out is bounded by
 (#columns × values-per-cell), and AQE handles post-explode skew.
 
 Known reference bugs NOT reproduced (documented deviations):
@@ -48,6 +48,7 @@ from pathlib import Path
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StringType, StructField, StructType
 
 from ..sources import storage
 from ..coercion import (
@@ -56,10 +57,11 @@ from ..coercion import (
     coerce_decimal,
     coerce_integer,
     coercion_kind_flags,
+    literal_map,
 )
 from ..iri import expand_iri_with_base, to_kebab_case
 from ..manifest import ImportStep, Manifest
-from ..vocabulary import VocabularyMap
+from ..vocabulary import IdOpt, VocabularyMap
 
 TRIPLE_COLS = ("subj", "pred", "obj", "obj_kind")
 
@@ -352,18 +354,27 @@ def csv_headers(spark: SparkSession, path: str) -> list[str]:
 def read_csv_positional(spark: SparkSession, path: str) -> tuple[DataFrame, list[str]]:
     """RFC-4180 scan; columns renamed c0..cn so header strings with
     dots/parens never fight Spark's column resolution. Returns the raw
-    header list alongside."""
+    header list alongside.
+
+    The all-string schema comes from the driver-read header, so Spark
+    runs no job to infer it; the header line is still skipped. Its
+    fields carry the header's names where Spark accepts them (non-empty,
+    no case-insensitive duplicates): Spark checks each file's header
+    against the schema and logs a warning per file on a mismatch."""
     headers = csv_headers(spark, path)
+    positional = [f"c{i}" for i in range(len(headers))]
+    unique = all(headers) and len({h.lower() for h in headers}) == len(headers)
+    schema = StructType([StructField(n, StringType()) for n in (headers if unique else positional)])
     df = (
-        spark.read.option("header", True)
+        spark.read.schema(schema)
+        .option("header", True)
         .option("quote", '"')
         .option("escape", '"')
         .option("multiLine", True)
         .option("mode", "PERMISSIVE")
         .csv(path)
     )
-    df = df.toDF(*[f"c{i}" for i in range(len(df.columns))])
-    return df, headers
+    return df.toDF(*positional), headers
 
 
 def read_step_positional(
@@ -395,18 +406,6 @@ def _nonempty(c: Column) -> Column:
 # --------------------------------------------------------------------------
 # step → triples
 # --------------------------------------------------------------------------
-
-
-def basic_instance_triples(
-    spark: SparkSession,
-    manifest: Manifest,
-    vocab: VocabularyMap,
-    step: ImportStep,
-    base_path: str | Path,
-) -> DataFrame:
-    """BasicInstanceStep / PicklistStep triples only (see
-    basic_instance_outputs for the planning metadata variant)."""
-    return basic_instance_outputs(spark, manifest, vocab, step, base_path)[0]
 
 
 def basic_instance_outputs(
@@ -577,21 +576,14 @@ def subclass_instance_triples(
 
     df = df.filter(_nonempty(_col(id_idx)) & _nonempty(_col(sub_idx))).withColumn("_subj", subj)
 
-    # J3 broadcast resolve (processor_impl.rs:487-516): the cell matches a
+    # J3 literal-map resolve (processor_impl.rs:487-516): the cell matches a
     # class key's String id or original_id, then normalize().pascal() of the
     # raw key is the resolved type (serialized as the replacement side).
-    resolve_rows = []
-    for key in vocab.classes:
-        raw = vocab.raw_class_keys.get(key)
-        if raw is None:
-            from ..vocabulary import IdOpt
-
-            raw = IdOpt(key)
-        resolve_rows.append((key, raw.normalize().pascal().final()))
-    lookup = spark.createDataFrame(resolve_rows, ["_sub_raw", "_sub_resolved"])
-
-    df = df.join(F.broadcast(lookup), df[f"c{sub_idx}"] == lookup["_sub_raw"], "left")
-    resolved_type = F.coalesce(F.col("_sub_resolved"), _col(sub_idx))
+    resolve = {
+        key: (vocab.raw_class_keys.get(key) or IdOpt(key)).normalize().pascal().final()
+        for key in vocab.classes
+    }
+    resolved_type = F.coalesce(literal_map(resolve)[_col(sub_idx)], _col(sub_idx))
 
     arrays = [
         F.array(
@@ -657,21 +649,18 @@ def properties_instance_triples(
         _nonempty(_col(id_idx)) & _nonempty(_col(pid_idx)) & _nonempty(_col(pval_idx))
     )
 
-    # J2 broadcast property resolve (processor_impl.rs:734-755): the cell
+    # J2 literal-map property resolve (processor_impl.rs:734-755): the cell
     # matches a property key (camel original / original id); the emitted
     # predicate is that key's camel final — term.id.final() minus the base
     # (the reference's map key is the *unexpanded* camel IdOpt).
     base = manifest.model.base_iri
-    rows = []
+    finals = {}
     for key, term in vocab.properties.items():
         fin = term.id.final()
         if base and fin.startswith(base):
             fin = fin[len(base):]
-        rows.append((key, fin))
-    lookup = spark.createDataFrame(rows, ["_pid_raw", "_pid_final"])
-
-    df = df.join(F.broadcast(lookup), df[f"c{pid_idx}"] == lookup["_pid_raw"], "left")
-    pred = F.coalesce(F.col("_pid_final"), _col(pid_idx))
+        finals[key] = fin
+    pred = F.coalesce(literal_map(finals)[_col(pid_idx)], _col(pid_idx))
 
     triples = df.select(
         subj.alias("subj"),
@@ -701,16 +690,11 @@ def build_instance_triples(
 ) -> DataFrame:
     """PHASE B (processor/mod.rs:211-251): picklist steps first, then the
     rest in manifest order; union + dedup = the reference's merge-by-@id
-    with set-union arrays (A1), expressed as one shuffle."""
-    dfs: list[DataFrame] = []
-    for step in manifest.instance_sequence():
-        if step.has_type("SubClassInstanceStep"):
-            dfs.append(subclass_instance_triples(spark, manifest, vocab, step, base_path))
-        elif step.has_type("PropertiesInstanceStep"):
-            dfs.append(properties_instance_triples(spark, manifest, vocab, step, base_path))
-        else:
-            dfs.append(basic_instance_triples(spark, manifest, vocab, step, base_path))
-    out = dfs[0]
-    for d in dfs[1:]:
-        out = out.unionByName(d)
-    return out.dropDuplicates(["subj", "pred", "obj", "obj_kind"])
+    with set-union arrays (A1), expressed as one shuffle.
+
+    The triples half of ``violations.build_instance_outputs``, which owns
+    the step loop (it also folds picklist ids into ``one_of``, which no
+    triple reads)."""
+    from .violations import build_instance_outputs
+
+    return build_instance_outputs(spark, manifest, vocab, base_path)[0]

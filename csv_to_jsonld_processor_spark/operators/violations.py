@@ -17,7 +17,8 @@ already materialized. Rules mirror the reference's warning categories:
 - ``boolean_validation`` failed Boolean coercion (value_processor.rs:116-146)
 - ``date_validation``    failed Date parse (value_processor.rs:17-80)
 - ``picklist_validation`` missing one_of / value not in picklist
-  (value_processor.rs:182-231), enforced via broadcast anti-join
+  (value_processor.rs:182-231), enforced via a literal-map membership
+  test
 
 Decimal failures are intentionally NOT routed: the reference's Decimal
 arm falls back to the cleaned string silently (value_processor.rs:106-114)
@@ -40,6 +41,7 @@ from pathlib import Path
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..coercion import literal_map
 from ..iri import expand_iri_with_base, to_kebab_case
 from ..manifest import Manifest
 from ..vocabulary import VocabularyMap, accumulate_picklist_one_of
@@ -152,9 +154,10 @@ def _picklist_violations(
     namespaceIris off (the reference builds the prefixed IRI
     unconditionally at :208-216 while one_of entries are only prefixed
     when namespacing is on, so every value "fails" in that mode; quirk
-    reproduced faithfully). Enforcement is a broadcast anti-join against
-    the one_of set — scale-safe: the enum side broadcasts, the value
-    side never shuffles."""
+    reproduced faithfully). Enforcement is a literal-map membership test
+    against the one_of set, inside the step's own stage: a value fails
+    when ``map[check_iri]`` is NULL, so a NULL check IRI fails as it did
+    under an anti-join, and an empty one_of fails every value."""
     out: list[DataFrame] = []
     sev = "error" if strict else "warning"
     base = manifest.instances.base_iri
@@ -199,11 +202,9 @@ def _picklist_violations(
             raw_value = F.col("obj")
         check_iri = F.concat(F.lit(joined_prefix), raw_value)
 
-        enum_df = spark.createDataFrame([(v,) for v in one_of], "check_iri string")
+        enums = literal_map({v: v for v in one_of})
         viol = (
-            triples.where(F.col("pred") == p.name)
-            .withColumn("check_iri", check_iri)
-            .join(F.broadcast(enum_df), "check_iri", "left_anti")
+            triples.where((F.col("pred") == p.name) & enums[check_iri].isNull())
             .select(
                 F.lit(stage).alias("stage"),
                 F.lit("picklist_validation").alias("rule"),
@@ -228,8 +229,9 @@ def build_instance_outputs(
 
     Picklist one_of accumulates first (picklist steps are ordered ahead
     of basic steps — processor/mod.rs:211-251 — so membership checks see
-    the full enum). Triples match build_instance_triples exactly; the
-    violations union is lazily evaluated like any other DataFrame.
+    the full enum). This is the one step loop: build_instance_triples
+    returns its triples. The violations union is lazily evaluated like
+    any other DataFrame.
 
     Subclass and EAV (properties) steps emit raw strings with no
     coercion in the reference — no per-value sites exist there to

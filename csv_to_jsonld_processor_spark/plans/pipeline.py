@@ -11,6 +11,12 @@ Two instance sink shapes:
   allowed under a row-count guard.
 - NDJSON-framed JSON-LD nodes, written distributed and partitioned by a
   subject hash bucket — the 100 TB shape.
+
+One pass: the instance triples and violations are planned once, and each
+is computed by the job that writes it. Every reported count comes from
+that writing job (``DataFrame.observe``), and the warnings list is read
+back from the written violations file, so no count or collect re-runs
+the CSV scans, the dedup shuffle or the JSON-LD assembly.
 """
 
 from __future__ import annotations
@@ -19,11 +25,11 @@ import json
 import os
 from pathlib import Path
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..manifest import Manifest
-from ..operators.violations import build_instance_outputs
+from ..operators.violations import VIOLATION_SCHEMA, build_instance_outputs
 from ..vocabulary import (
     VocabularyMap,
     build_jsonld_context,
@@ -102,6 +108,20 @@ def assemble_entities_json(triples: DataFrame) -> DataFrame:
     return part.mapInPandas(gen, schema="subj string, node string")
 
 
+def _counted(df: DataFrame) -> tuple[DataFrame, Observation]:
+    """``df`` with its row count observed by whichever job consumes it."""
+    seen = Observation()
+    return df.observe(seen, F.count(F.lit(1)).alias("rows")), seen
+
+
+def _counted_nodes(triples: DataFrame) -> tuple[DataFrame, Observation, Observation]:
+    """JSON-LD nodes plus the triple and node counts their consuming job
+    reports. An Observation serves one action, so each job takes fresh ones."""
+    triples, triples_seen = _counted(triples)
+    nodes, nodes_seen = _counted(assemble_entities_json(triples))
+    return nodes, triples_seen, nodes_seen
+
+
 class PipelineOutcome:
     def __init__(self, errors: list[str], warnings: list[str], counts: dict):
         self.errors = errors
@@ -174,11 +194,15 @@ class Pipeline:
 
         # A7: violations are a first-class output — always materialized;
         # strict mode fails the run on any error-severity row, mirroring
-        # the reference's ProcessingState error escalation (error/mod.rs)
-        violations.write.mode("overwrite").parquet(
-            str(storage.join_path(out_dir, "violations.parquet"))
-        )
-        vio_rows = violations.limit(10_000).collect()
+        # the reference's ProcessingState error escalation (error/mod.rs).
+        # The write counts them; the messages are read back from the file
+        # instead of re-planning the violations from the CSVs.
+        violations_path = str(storage.join_path(out_dir, "violations.parquet"))
+        violations, violations_seen = _counted(violations)
+        violations.write.mode("overwrite").parquet(violations_path)
+        n_violations = violations_seen.get["rows"]
+        written = spark.read.schema(VIOLATION_SCHEMA).parquet(violations_path)
+        vio_rows = written.limit(10_000).collect()
         warnings = [
             f"[{r.rule}] stage={r.stage} subj={r.subj} pred={r.pred}: {r.value}"
             for r in vio_rows
@@ -190,17 +214,24 @@ class Pipeline:
             if r.severity == "error"
         ]
         if self.strict and vio_errors:
-            return PipelineOutcome(vio_errors, warnings, {"violations": len(vio_rows)})
-
-        nodes = assemble_entities_json(triples)
+            return PipelineOutcome(vio_errors, warnings, {"violations": n_violations})
 
         context = build_jsonld_context(
             vocab, self.manifest.model.base_iri, self.manifest.instances.base_iri
         )
 
-        n_entities = nodes.count()
-        if single_document and n_entities <= SINGLE_DOC_MAX_ENTITIES:
-            insert = [json.loads(r.node) for r in nodes.orderBy("subj").collect()]
+        # one job assembles and writes the nodes; it also reports the
+        # triple and node counts
+        nodes, triples_seen, nodes_seen = _counted_nodes(triples)
+        rows = None
+        if single_document:
+            # one bounded collect; one row past the cap means "too many"
+            rows = nodes.orderBy("subj").limit(SINGLE_DOC_MAX_ENTITIES + 1).collect()
+            if len(rows) > SINGLE_DOC_MAX_ENTITIES:
+                rows = None
+                nodes, triples_seen, nodes_seen = _counted_nodes(triples)
+        if rows is not None:
+            insert = [json.loads(r.node) for r in rows]
             doc = {"ledger": self.manifest.ledger, "@context": context, "insert": insert}
             storage.write_text(
                 storage.join_path(out_dir, "instances.jsonld"),
@@ -227,11 +258,12 @@ class Pipeline:
             storage.join_path(out_dir, "vocab_meta.json"),
             json.dumps(vocab_meta_snapshot, indent=1, sort_keys=True),
         )
-        return PipelineOutcome(
-            [],
-            warnings,
-            {"entities": n_entities, "triples": triples.count(), "violations": len(vio_rows)},
-        )
+        counts = {
+            "entities": nodes_seen.get["rows"],
+            "triples": triples_seen.get["rows"],
+            "violations": n_violations,
+        }
+        return PipelineOutcome([], warnings, counts)
 
     def _write_vocabulary(self, vocab: VocabularyMap, out_dir: str | Path) -> None:
         """K2 (vocabulary/serializer.rs:19-66): classes + properties under

@@ -75,7 +75,8 @@ def kg_edge_window_counts_stream(
     watermark passes them."""
     from pyspark.sql import functions as F
 
-    from ..kg.graph import literal_map, predicate_context
+    from ..coercion import literal_map
+    from ..kg.graph import predicate_context
     from ..kg.link import kb_index
     from ..kg.mentions import extract_link_from_html
 

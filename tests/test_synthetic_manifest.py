@@ -238,3 +238,145 @@ def test_vocab_meta_reload_identical(spark, corpus, tmp_path):
     assert r2.ok
     for name in ("instances.jsonld", "vocabulary.jsonld", "vocab_meta.json"):
         assert (out1 / name).read_text() == (out2 / name).read_text(), name
+
+
+# the Gadgets step alone: Color, the target of its Picklist header, gets no
+# PicklistStep and so no one_of
+GADGETS_ONLY = {
+    **MANIFEST,
+    "instances": {**MANIFEST["instances"], "sequence": MANIFEST["instances"]["sequence"][:1]},
+}
+
+
+def _nodes(out):
+    """The NDJSON node lines a run wrote, as parsed JSON objects."""
+    import json as _json
+
+    return [
+        _json.loads(line)
+        for f in sorted((out / "instances_ndjson").rglob("*.txt"))
+        for line in f.read_text().splitlines()
+    ]
+
+
+def test_pipeline_run_is_one_pass(spark, corpus, tmp_path):
+    """Pipeline.run plans the instance triples once and every count comes
+    from the job that writes the data: the counts equal what was written."""
+    from csv_to_jsonld_processor_spark.plans.pipeline import Pipeline
+
+    sc = spark.sparkContext
+    out = tmp_path / "out"
+    sc.setJobGroup("manifest-one-pass", "Pipeline.run(single_document=False)")
+    try:
+        res = Pipeline(Manifest.from_dict(MANIFEST), corpus).run(spark, out, single_document=False)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert res.ok
+    # inferring each CSV's header, broadcasting the lookup tables per
+    # query, recomputing the violations for the warnings and counting
+    # nodes and triples in jobs of their own ran 18 jobs on this corpus
+    assert len(sc.statusTracker().getJobIdsForGroup("manifest-one-pass")) <= 18 // 2
+
+    nodes = _nodes(out)
+    n_triples = sum(
+        len(v) if isinstance(v, list) else 1
+        for node in nodes for k, v in node.items() if k != "@id"
+    )
+    n_violations = spark.read.parquet(str(out / "violations.parquet")).count()
+    assert res.counts == {"entities": len(nodes), "triples": n_triples, "violations": n_violations}
+    assert res.counts["triples"] == 27 and n_violations == 3
+
+
+def test_single_document_and_ndjson_nodes_agree(spark, corpus, tmp_path):
+    """Both sink shapes write the same nodes and report the same counts;
+    the single document lists them in subject order."""
+    import json as _json
+
+    from csv_to_jsonld_processor_spark.plans.pipeline import Pipeline
+
+    single = Pipeline(Manifest.from_dict(MANIFEST), corpus).run(spark, tmp_path / "s")
+    ndjson = Pipeline(Manifest.from_dict(MANIFEST), corpus).run(
+        spark, tmp_path / "n", single_document=False
+    )
+    assert single.counts == ndjson.counts
+    doc = _json.loads((tmp_path / "s" / "instances.jsonld").read_text())
+    assert [n["@id"] for n in doc["insert"]] == sorted(n["@id"] for n in doc["insert"])
+
+    def canon(nodes):
+        return sorted(_json.dumps(n, sort_keys=True) for n in nodes)
+
+    assert canon(doc["insert"]) == canon(_nodes(tmp_path / "n"))
+    assert len(doc["insert"]) == single.counts["entities"] == 5
+
+
+def test_picklist_without_enums_flags_every_value(spark, corpus):
+    """A Picklist header whose class has no PicklistStep (so no one_of)
+    fails every value, as validating against an empty list does."""
+    from csv_to_jsonld_processor_spark.operators.violations import build_instance_outputs
+
+    m = Manifest.from_dict(GADGETS_ONLY)
+    vocab = compile_vocabulary(m, corpus)
+    triples, violations = build_instance_outputs(spark, m, vocab, corpus)
+    rows = [r for r in violations.collect() if r.rule == "picklist_validation"]
+    flagged = {(r.subj, r.value) for r in rows if r.subj is not None}
+    values = {(r.subj, r.obj) for r in triples.collect() if r.pred == "has Color"}
+    assert flagged == values == {
+        ("gadget/G1", "color/red"), ("gadget/G2", "color/blue"), ("gadget/G3", "color/green")
+    }
+    assert any("no picklist enums defined" in r.value for r in rows if r.subj is None)
+
+
+def test_violation_count_is_not_capped(spark, tmp_path):
+    """counts['violations'] counts every written row; only the messages
+    list stops at 10,000. Strict mode stops before the JSON-LD assembly,
+    which would cost 10,050 nodes here."""
+    from csv_to_jsonld_processor_spark.plans.pipeline import Pipeline
+
+    n = 10_050
+    (tmp_path / "model").mkdir()
+    (tmp_path / "instances").mkdir()
+    (tmp_path / "model" / "Model.csv").write_text(MODEL_CSV)
+    (tmp_path / "instances" / "Gadgets.csv").write_text(
+        "Gadget ID,Counts\n" + "".join(f"G{i},x{i}\n" for i in range(n))
+    )
+    pipeline = Pipeline(Manifest.from_dict(GADGETS_ONLY), str(tmp_path), strict=True)
+    res = pipeline.run(spark, tmp_path / "out")
+    written = spark.read.parquet(str(tmp_path / "out" / "violations.parquet")).count()
+    assert not res.ok
+    assert res.counts["violations"] == written == n
+    assert len(res.errors) == 10_000
+
+
+@pytest.mark.parametrize(
+    "header",
+    ['Entity ID,,Name,Name,"Note"', 'Entity ID,Name.x,(Kind),Size,"Note, long"'],
+    ids=["empty_and_duplicate_names", "distinct_names"],
+)
+def test_csv_schema_read_matches_inference(spark, tmp_path, header):
+    """The positional scan with a schema from the driver-read header reads
+    the same rows as letting Spark infer the header: BOM, a quoted
+    multi-line cell, a row with one extra field and a short row."""
+    from csv_to_jsonld_processor_spark.operators.instance_steps import read_csv_positional
+
+    path = tmp_path / "t.csv"
+    body = (
+        "A,1,2,3,plain\n"
+        'B,1,2,3,"two\nlines, ""quoted"""\n'
+        "C,1,2,3,4,extra\n"
+        "D,1\n"
+    )
+    path.write_bytes(("﻿" + header + "\n" + body).encode("utf-8"))
+    df, headers = read_csv_positional(spark, str(path))
+    inferred = (
+        spark.read.option("header", True)
+        .option("quote", '"')
+        .option("escape", '"')
+        .option("multiLine", True)
+        .option("mode", "PERMISSIVE")
+        .csv(str(path))
+    )
+    inferred = inferred.toDF(*[f"c{i}" for i in range(len(inferred.columns))])
+    assert len(headers) == 5 and df.columns == inferred.columns
+    assert sorted(df.collect()) == sorted(inferred.collect())
+    assert len(df.collect()) == 4
